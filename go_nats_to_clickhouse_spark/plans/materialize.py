@@ -827,12 +827,7 @@ def ingested_index_tables(spark: SparkSession, sf_dir: str) -> dict[str, str]:
             ).isEmpty()
         )
         replayed = message_file_batch(spark, os.path.join(arrivals, first_doc))
-        apply_cascade(
-            replayed,
-            PipelineTables(cfg.warehouse_dir),
-            idempotent=True,
-            collect_counts=False,
-        )
+        apply_cascade(replayed, PipelineTables(cfg.warehouse_dir), idempotent=True)
         append_batch_index(docs_from_messages(replayed), tmp, is_new=True)
 
     return _published(f"ing-{sf_name}-", tag, ING_TABLES, build)

@@ -18,7 +18,8 @@ Re-expresses the reference's consumption model (main.go:86-94):
 
 Transport: the wire layer is injectable. ``JetStreamClient`` is the minimal
 protocol the source needs; tests and local runs use
-:class:`ReplayJetStreamClient` (deterministic, in-memory), and
+:class:`ReplayJetStreamClient` (deterministic, in-memory; fed from a
+replay file by :class:`ReplayFileClient`), and
 :class:`NatsPyJetStreamClient` wires the public ``nats-py`` client
 (import-gated — this environment does not ship it; the transport's full
 orchestration is exercised against a protocol-faithful in-process fake
@@ -28,7 +29,9 @@ socket layer itself still needs a live broker).
 
 from __future__ import annotations
 
+import bisect
 import json
+import os
 from dataclasses import dataclass
 from typing import Iterator, Sequence
 
@@ -73,26 +76,81 @@ class ReplayJetStreamClient(JetStreamClient):
     streams are replayable by sequence, which is what makes the reference's
     durable-consumer semantics recoverable)."""
 
-    def __init__(self, messages: Sequence[JsMessage] = ()):  # sorted by seq
-        self._messages = sorted(messages, key=lambda m: m.sequence)
+    def __init__(self, messages: Sequence[JsMessage] = ()):
+        self._messages: list[JsMessage] = []
+        self._seqs: list[int] = []  # sequence of each message, ascending
         self.acked_through = 0
+        self._extend(messages)
+
+    def _extend(self, msgs: Sequence[JsMessage]) -> None:
+        self._messages.extend(msgs)
+        seqs = [m.sequence for m in msgs]
+        if any(a > b for a, b in zip(self._seqs[-1:] + seqs, seqs)):
+            self._messages.sort(key=lambda m: m.sequence)
+            self._seqs = [m.sequence for m in self._messages]
+        else:
+            self._seqs.extend(seqs)
 
     def publish(self, msg: JsMessage) -> None:
-        self._messages.append(msg)
+        self._extend([msg])
 
     def max_sequence(self) -> int:
-        return self._messages[-1].sequence if self._messages else 0
+        return self._seqs[-1] if self._seqs else 0
 
     def fetch(self, start_seq: int, end_seq: int, subjects: Sequence[str]) -> list[JsMessage]:
+        lo = bisect.bisect_right(self._seqs, start_seq)
+        hi = bisect.bisect_right(self._seqs, end_seq)
         return [
             m
-            for m in self._messages
-            if start_seq < m.sequence <= end_seq
-            and any(_subject_matches(m.subject, pat) for pat in subjects)
+            for m in self._messages[lo:hi]
+            if any(_subject_matches(m.subject, pat) for pat in subjects)
         ]
 
     def ack_through(self, seq: int) -> None:
         self.acked_through = max(self.acked_through, seq)
+
+
+class ReplayFileClient(ReplayJetStreamClient):
+    """A replay file (one JSON message per line) read as an append-only
+    log: :meth:`refresh` parses only the complete lines written since the
+    last call. A trailing line without its newline is held back until the
+    newline arrives. The file is parsed again from the start when it is
+    replaced (new inode), shrinks, or no longer holds the last line read
+    where it was (rewritten in place)."""
+
+    def __init__(self, path: str):
+        super().__init__()
+        self._path = path
+        self._inode: int | None = None
+        self._end = 0  # bytes parsed: always just past a newline
+        self._tail = b""  # the bytes before _end: last non-blank line on
+
+    def _reset(self) -> None:
+        self._messages, self._seqs = [], []
+        self._end, self._tail = 0, b""
+
+    def refresh(self) -> None:
+        with open(self._path, "rb") as fh:
+            st = os.fstat(fh.fileno())
+            if (
+                st.st_ino != self._inode
+                or st.st_size < self._end
+                or os.pread(fh.fileno(), len(self._tail), self._end - len(self._tail))
+                != self._tail
+            ):
+                self._reset()
+                self._inode = st.st_ino
+            fh.seek(self._end)
+            chunk = fh.read(st.st_size - self._end)
+        lines = chunk[: chunk.rfind(b"\n") + 1]
+        if not lines:
+            return
+        self._end += len(lines)
+        body = lines.rstrip(b"\n")
+        self._tail = lines[body.rfind(b"\n") + 1 :] if body else self._tail + lines
+        self._extend(
+            [JsMessage(**json.loads(ln)) for ln in lines.splitlines() if ln.strip()]
+        )
 
 
 def _subject_matches(subject: str, pattern: str) -> bool:
@@ -141,7 +199,8 @@ class NatsStreamReader(DataSourceStreamReader):
         # Resolved through a per-process cache, never stored on the reader:
         # the reader object is pickled to every task, and a transport
         # holding the whole replay stream must not travel with it. Each
-        # worker process connects (or parses the replay file) once.
+        # worker process connects once; a replay file is parsed once and
+        # then only its appended lines are.
         return _connect(self._options)
 
     # -- cursor bookkeeping ------------------------------------------------
@@ -455,7 +514,8 @@ class NatsPyJetStreamClient(JetStreamClient):
             self._loop.close()
 
 
-#: per-process transport cache (workers are reused across batches)
+#: per-process transport cache (workers are reused across batches): one
+#: client per replay path or live connection
 _CLIENT_CACHE: dict = {}
 
 #: per-process cursor caches keyed by normalized source options — shared by
@@ -476,21 +536,19 @@ def _reset_cursor_caches() -> None:
 def _connect(options: dict) -> JetStreamClient:
     """Build (or fetch the cached) transport.
 
-    * ``replayFile`` -> deterministic local replay (tests/dev default).
+    * ``replayFile`` -> deterministic local replay (tests/dev default), one
+      :class:`ReplayFileClient` per path, refreshed with the lines appended
+      since the last call.
     * ``servers`` (+ ``stream``) -> live JetStream via the public nats-py
       client (import-gated: a clear error, not a crash, when absent).
     """
     replay_file = options.get("replayfile") or options.get("replayFile")
     if replay_file:
-        import os as _os
-
-        key = (replay_file, _os.path.getmtime(replay_file))
-        client = _CLIENT_CACHE.get(key)
+        path = os.path.abspath(replay_file)
+        client = _CLIENT_CACHE.get(("replay", path))
         if client is None:
-            with open(replay_file, encoding="utf-8") as fh:
-                msgs = [JsMessage(**json.loads(line)) for line in fh if line.strip()]
-            client = ReplayJetStreamClient(msgs)
-            _CLIENT_CACHE[key] = client
+            client = _CLIENT_CACHE[("replay", path)] = ReplayFileClient(path)
+        client.refresh()
         return client
     servers = options.get("servers") or options.get("url")
     if not servers:

@@ -22,8 +22,12 @@ Structured Streaming query:
 
 Scale posture: every transform here is a narrow projection (no shuffle);
 per-batch work is bounded by ``batch_size`` admission control; state lives
-in the checkpoint, not the driver. On a cluster the same code runs with a
-partitioned source (one NATS consumer per partition ≈ queue-group member).
+in the checkpoint, not the driver. A trigger reads its source once, into
+one cached batch, and runs one Spark job per sink (raw, union, analytics,
+plus the dead-letter write only when the batch holds malformed rows). Its
+row counts are metrics observed during those writes, not extra counting
+jobs. On a cluster the same code runs with a partitioned source (one NATS
+consumer per partition ≈ queue-group member).
 """
 
 from __future__ import annotations
@@ -31,7 +35,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -99,19 +103,23 @@ class PipelineTables:
         return os.path.join(self.warehouse, table)
 
 
-def _split_valid(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Valid rows vs dead-letter rows (malformed: missing ts/seq/subject)."""
-    ok = F.col("timestamp").isNotNull() & F.col("sequence").isNotNull() & F.col(
-        "subject"
-    ).isNotNull()
-    valid = df.filter(ok)
-    dead = df.filter(~ok).select(
+def _well_formed():
+    """True for rows that carry the JetStream metadata the cascade keys on;
+    the rest (missing ts/seq/subject) are dead letters."""
+    return (
+        F.col("timestamp").isNotNull()
+        & F.col("sequence").isNotNull()
+        & F.col("subject").isNotNull()
+    )
+
+
+def _dead_letters(df: DataFrame) -> DataFrame:
+    return df.filter(~_well_formed()).select(
         F.col("timestamp"),
         F.col("subject"),
         F.lit("missing jetstream metadata").alias("error"),
         F.to_json(F.struct("*")).alias("raw"),
     )
-    return valid, dead
 
 
 def apply_cascade(
@@ -119,9 +127,10 @@ def apply_cascade(
     tables: PipelineTables,
     idempotent: bool = False,
     write_partitions: int = 4,
-    collect_counts: bool = True,
 ) -> dict[str, int]:
-    """Apply one micro-batch through the full cascade; returns row counts.
+    """Apply one micro-batch through the full cascade; returns row counts
+    (``raw``: rows appended to each of raw/union/analytics,
+    ``dead_letter``: rows appended to the dead-letter table).
 
     Used by both the streaming foreachBatch and batch backfills — identical
     semantics either way (Spark's batch/streaming unification).
@@ -135,31 +144,51 @@ def apply_cascade(
     partition regardless of table history. (The reference accepts
     duplicates on redelivery — main.go:122-127; this is the documented
     upgrade path, off by default for parity.)
+
+    Cost per call: the source is read once, into one materialized batch
+    that every sink reads; each sink is one Spark job (the dead-letter
+    write runs only when the batch holds malformed rows), and the
+    idempotent mode adds its snapshot and dedup jobs. The counts are
+    metrics observed while the batch is read, so they cost no job.
     """
+    ok = _well_formed()
+    seen = Observation()
     # Micro-batches are admission-controlled (<= batch_size rows), so writing
     # from the source's full partition count sprays tiny files (tasks x
     # hive-partitions per table per trigger) and pays commit overhead per
-    # file. Repartitioning the small batch is cheap and bounds file count;
-    # raise write_partitions for high-volume deployments.
-    batch = batch.repartition(write_partitions)
-    valid, dead = _split_valid(batch)
-    snapshotted = False
-    if idempotent:
-        valid = valid.dropDuplicates(["subject", "sequence"])
-        dest = tables.path(ALL_STREAMS_TABLE)
-        if os.path.exists(dest):
-            months = [
-                r[0]
-                for r in layout.with_partition_col(valid)
-                .select(layout.PARTITION_COL)
-                .distinct()
-                .collect()  # few distinct months per batch — driver-safe
-            ]
-            existing = (
-                layout.read_table(batch.sparkSession, dest)
-                .filter(F.col(layout.PARTITION_COL).isin(months))
-                .select("subject", "sequence")
-            )
+    # file. coalesce bounds the file count without a shuffle.
+    batch = batch.coalesce(write_partitions).observe(
+        seen, F.count_if(ok).alias("valid"), F.count_if(~ok).alias("dead")
+    )
+    # The batch is materialized once: every sink, the dead-letter split and
+    # the counts read this one copy, so the source is never re-read.
+    # Observed metrics come from the plan of the first action over the
+    # observed rows, and adaptive execution replaces that plan when an
+    # exchange above it turns out empty (the idempotent month lookup over a
+    # batch of dead letters) — the metrics are then lost. So that first
+    # action must be a plain scan: the raw write by default, an eager
+    # snapshot ahead of the idempotent dedup.
+    batch = batch.localCheckpoint(eager=True) if idempotent else batch.persist()
+    try:
+        valid = batch.filter(ok)
+        kept = None
+        if idempotent:
+            valid = valid.dropDuplicates(["subject", "sequence"])
+            dest = tables.path(ALL_STREAMS_TABLE)
+            if os.path.exists(dest):
+                months = [
+                    r[0]
+                    for r in layout.with_partition_col(valid)
+                    .select(layout.PARTITION_COL)
+                    .distinct()
+                    .collect()  # few distinct months per batch — driver-safe
+                ]
+                existing = (
+                    layout.read_table(batch.sparkSession, dest)
+                    .filter(F.col(layout.PARTITION_COL).isin(months))
+                    .select("subject", "sequence")
+                )
+                valid = valid.join(existing, ["subject", "sequence"], "left_anti")
             # The anti-join's plan SCANS the union table this cascade is
             # about to append to, and Spark drops any cached plan that
             # reads a path the moment that path is written
@@ -170,17 +199,12 @@ def apply_cascade(
             # freshly-landed rows away (observed: analytics lost every
             # batch after the first). localCheckpoint cuts the lineage to
             # a block-manager snapshot with no path dependency, so all
-            # three sinks write exactly the same row set.
-            valid = valid.join(
-                existing, ["subject", "sequence"], "left_anti"
-            ).localCheckpoint(eager=True)
-            snapshotted = True
-    # One pass over the batch feeds three tables; cache so the (small,
-    # admission-controlled) batch isn't recomputed per sink.
-    if not snapshotted:
-        valid = valid.persist()
-    try:
-        counts: dict[str, int] = {}
+            # three sinks write exactly the same row set — counted by the
+            # raw write, a plain scan of the snapshot.
+            kept = Observation()
+            valid = valid.localCheckpoint(eager=True).observe(
+                kept, F.count(F.lit(1)).alias("rows")
+            )
         raw = message_to_raw(valid).withColumn("stream", stream_name_from_subject_col())
         # Per-stream raw tables (init.sql:8-32): one write partitioned by the
         # derived stream column — N streams land in N directories from a
@@ -194,7 +218,6 @@ def apply_cascade(
             tables.path(RAW_TABLE_PREFIX.rstrip("_"))
         )
         raw_plain = raw.drop("stream")
-        counts["raw"] = valid.count() if collect_counts else -1
         # Union table (init.sql:35-46): identical rows, one flat table.
         layout.write_partitioned(
             raw_plain,
@@ -209,17 +232,18 @@ def apply_cascade(
             layout.SORT_KEYS["analytics"],
             bloom_cols=layout.BLOOM_KEYS["analytics"],
         )
-        # isEmpty short-circuits (take-1), so the common no-dead-letter path
-        # costs one cheap probe instead of a counting pass.
-        if dead.isEmpty():
-            counts["dead_letter"] = 0
-        else:
-            dead.write.mode("append").parquet(tables.path(DEAD_LETTER_TABLE))
-            counts["dead_letter"] = dead.count() if collect_counts else -1
-        return counts
+        # The batch has been materialized by now, so its metrics are final.
+        observed = seen.get
+        if observed["dead"]:
+            _dead_letters(batch).write.mode("append").parquet(
+                tables.path(DEAD_LETTER_TABLE)
+            )
+        return {
+            "raw": kept.get["rows"] if kept is not None else observed["valid"],
+            "dead_letter": observed["dead"],
+        }
     finally:
-        if not snapshotted:
-            valid.unpersist()
+        batch.unpersist()
 
 
 def start_pipeline(
@@ -240,8 +264,7 @@ def start_pipeline(
     tables = PipelineTables(cfg.warehouse_dir)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        # steady-state ingest skips the per-batch counting jobs
-        apply_cascade(batch_df, tables, idempotent=idempotent, collect_counts=False)
+        apply_cascade(batch_df, tables, idempotent=idempotent)
 
     seconds = cfg.batch_timeout_seconds if trigger_seconds is None else trigger_seconds
     return (
@@ -355,13 +378,11 @@ def start_ingest_service(
         batch_df = batch_df.persist()  # the sink families share this batch
         spark_b = batch_df.sparkSession
         try:
-            counts = apply_cascade(
-                batch_df, tables, idempotent=idempotent, collect_counts=health
-            )
+            counts = apply_cascade(batch_df, tables, idempotent=idempotent)
             if health:
-                # rows_in derives from the counts the cascade already
-                # collected (valid appended + dead-lettered) — no extra
-                # count() job on the batch (ADVICE r8). Idempotent-dedup
+                # rows_in derives from the counts the cascade observed
+                # (valid appended + dead-lettered) — no extra count() job
+                # on the batch (ADVICE r8). Idempotent-dedup
                 # drops are invisible here by construction: health
                 # records what the sink admitted, and a replayed epoch's
                 # rows were admitted in their original batch.

@@ -3,6 +3,8 @@ sequence-offset admission control, partition planning, replay transport."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from go_nats_to_clickhouse_spark.schemas import MESSAGE_SCHEMA
@@ -57,27 +59,31 @@ class TestReplayClient:
         assert client.acked_through == 2
 
 
+def _lines(msgs) -> str:
+    """Messages as replay-file lines (one JSON object per line)."""
+    return "".join(
+        json.dumps(
+            {
+                "subject": m.subject,
+                "data": m.data,
+                "sequence": m.sequence,
+                "timestamp_us": m.timestamp_us,
+                "metadata_json": m.metadata_json,
+            }
+        )
+        + "\n"
+        for m in msgs
+    )
+
+
 def _reader(client_msgs, max_per_trigger=1000, **opts):
-    import json
     import tempfile
 
     # route through the replayFile transport (what production options do)
     f = tempfile.NamedTemporaryFile(
         mode="w", suffix=".jsonl", delete=False, encoding="utf-8"
     )
-    for m in client_msgs:
-        f.write(
-            json.dumps(
-                {
-                    "subject": m.subject,
-                    "data": m.data,
-                    "sequence": m.sequence,
-                    "timestamp_us": m.timestamp_us,
-                    "metadata_json": m.metadata_json,
-                }
-            )
-            + "\n"
-        )
+    f.write(_lines(client_msgs))
     f.close()
     options = {
         "replayFile": f.name,
@@ -307,6 +313,157 @@ class TestTransportSelection:
         # cached: same options -> same client instance
         assert natsmod._connect({"servers": "nats://a:4222, nats://b:4222",
                                  "stream": "s1", "durable": "d1"}) is client
+
+
+class TestReplayFileReader:
+    """The replay transport reads its file as an append-only log: one cached
+    client per path, parsing only the complete lines appended since its
+    last call, and reparsing the file when it was replaced or rewritten."""
+
+    @pytest.fixture(autouse=True)
+    def _fresh_cache(self, monkeypatch):
+        from go_nats_to_clickhouse_spark.sources import nats as natsmod
+
+        monkeypatch.setattr(natsmod, "_CLIENT_CACHE", {})
+
+    @staticmethod
+    def _connect(path):
+        from go_nats_to_clickhouse_spark.sources.nats import _connect
+
+        return _connect({"replayFile": str(path)})
+
+    @staticmethod
+    def _seqs(client, lo=0, hi=10**9):
+        return [m.sequence for m in client.fetch(lo, hi, [">"])]
+
+    def test_appended_lines_become_visible_without_reparse(self, tmp_path):
+        path = tmp_path / "r.jsonl"
+        path.write_text(_lines(_msgs(5)))
+        client = self._connect(path)
+        before = client.fetch(0, 5, [">"])
+        with open(path, "a", encoding="utf-8") as fh:
+            fh.write(_lines(_msgs(8)[5:]))
+        assert self._connect(path) is client
+        assert client.max_sequence() == 8
+        assert self._seqs(client, 5) == [6, 7, 8]
+        # the lines read before were not parsed again
+        assert all(a is b for a, b in zip(before, client.fetch(0, 5, [">"])))
+
+    def test_partial_trailing_line_held_back(self, tmp_path):
+        path = tmp_path / "r.jsonl"
+        text = _lines(_msgs(4))
+        path.write_text(text[:-1])  # the 4th line still lacks its newline
+        assert self._seqs(self._connect(path)) == [1, 2, 3]
+        with open(path, "a", encoding="utf-8") as fh:
+            fh.write("\n")
+        assert self._seqs(self._connect(path)) == [1, 2, 3, 4]
+
+    def test_blank_padding_lines_skipped(self, tmp_path):
+        path = tmp_path / "r.jsonl"
+        lines = _lines(_msgs(3)).splitlines(keepends=True)
+        path.write_text(lines[0] + "\n\n" + lines[1])
+        assert self._seqs(self._connect(path)) == [1, 2]
+        with open(path, "a", encoding="utf-8") as fh:
+            fh.write("\n\n")
+        assert self._seqs(self._connect(path)) == [1, 2]
+        with open(path, "a", encoding="utf-8") as fh:
+            fh.write(lines[2])
+        assert self._seqs(self._connect(path)) == [1, 2, 3]
+
+    def test_rewrite_in_place_reparses(self, tmp_path):
+        path = tmp_path / "r.jsonl"
+        path.write_text(_lines(_msgs(5)))
+        client = self._connect(path)
+        assert client.max_sequence() == 5
+        inode = path.stat().st_ino
+        # same inode, same length or longer, different content
+        shifted = [
+            JsMessage(m.subject, m.data, m.sequence + 10, m.timestamp_us)
+            for m in _msgs(6)
+        ]
+        path.write_text(_lines(shifted))
+        assert path.stat().st_ino == inode
+        assert self._seqs(self._connect(path)) == list(range(11, 17))
+
+    def test_truncate_reparses(self, tmp_path):
+        path = tmp_path / "r.jsonl"
+        path.write_text(_lines(_msgs(5)))
+        assert self._connect(path).max_sequence() == 5
+        path.write_text(_lines(_msgs(2)))
+        assert self._seqs(self._connect(path)) == [1, 2]
+
+    def test_replaced_file_reparses(self, tmp_path):
+        import os
+
+        path = tmp_path / "r.jsonl"
+        path.write_text(_lines(_msgs(3)))
+        assert self._connect(path).max_sequence() == 3
+        new = tmp_path / "new.jsonl"
+        new.write_text(_lines(_msgs(3)) + _lines(_msgs(9)[3:]))
+        os.replace(new, path)
+        assert self._seqs(self._connect(path)) == list(range(1, 10))
+
+    def test_cache_holds_one_client_per_file(self, tmp_path):
+        from go_nats_to_clickhouse_spark.sources import nats as natsmod
+
+        paths = [tmp_path / "a.jsonl", tmp_path / "b.jsonl"]
+        for p in paths:
+            p.write_text("")
+        msgs = _msgs(6)
+        for m in msgs:
+            for p in paths:
+                with open(p, "a", encoding="utf-8") as fh:
+                    fh.write(_lines([m]))
+                self._connect(p)
+        assert len(natsmod._CLIENT_CACHE) == 2
+        for p in paths:
+            assert self._seqs(self._connect(p)) == [m.sequence for m in msgs]
+
+    def test_fetch_bisects_out_of_order_appends(self, tmp_path):
+        path = tmp_path / "r.jsonl"
+        msgs = _msgs(6)
+        path.write_text(_lines([msgs[i] for i in (0, 2, 1)]))
+        client = self._connect(path)
+        with open(path, "a", encoding="utf-8") as fh:
+            fh.write(_lines([msgs[i] for i in (5, 3, 4)]))
+        self._connect(path)
+        assert self._seqs(client) == [1, 2, 3, 4, 5, 6]
+        assert self._seqs(client, 2, 4) == [3, 4]
+        assert client.fetch(2, 4, ["nomatch.>"]) == []
+
+
+class TestEmptyBatchCounts:
+    """The cascade's counts are observed metrics; a batch with nothing to
+    write must still deliver them rather than wait for them forever."""
+
+    @pytest.mark.parametrize("idempotent", [False, True])
+    @pytest.mark.parametrize("rows", ["empty", "dead_only"])
+    def test_counts_without_blocking(self, spark, tmp_path, idempotent, rows):
+        import threading
+
+        from go_nats_to_clickhouse_spark.streaming.pipeline import (
+            PipelineTables,
+            apply_cascade,
+        )
+
+        import datetime as dt
+
+        tables = PipelineTables(str(tmp_path / "wh"))
+        # a first batch lands the union table, so the idempotent dedup of the
+        # batch under test also reads it back for the anti-join
+        first = [(dt.datetime(2024, 3, 1), "a.b.c.d", 1, "{}", "{}")]
+        apply_cascade(spark.createDataFrame(first, MESSAGE_SCHEMA), tables, idempotent)
+        data = [] if rows == "empty" else [(None, "a.b.c.d", 2, "{}", "{}")] * 2
+        df = spark.createDataFrame(data, MESSAGE_SCHEMA)
+        out = {}
+        t = threading.Thread(
+            target=lambda: out.update(apply_cascade(df, tables, idempotent)),
+            daemon=True,
+        )
+        t.start()
+        t.join(timeout=180)
+        assert not t.is_alive(), "apply_cascade blocked on its observed counts"
+        assert out == {"raw": 0, "dead_letter": len(data)}
 
 
 class TestEndToEndStream:

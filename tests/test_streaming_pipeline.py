@@ -99,6 +99,105 @@ class TestCascade:
         assert n1 == n2 == 25
 
 
+def _admitted(progress) -> int:
+    """Sequences a trigger admitted: its end offset minus its start."""
+    import ast
+
+    def seq(offset):
+        # JSON or Python dict text; the first trigger starts from "None"
+        parsed = ast.literal_eval(offset) if offset else None
+        return int(parsed["seq"]) if parsed else 0
+
+    src = progress.sources[0]
+    return seq(src.endOffset) - seq(src.startOffset)
+
+
+def _trigger_jobs(spark, query) -> int:
+    """Spark jobs the query ran: streaming runs each trigger's jobs under
+    the query's run id as job group."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return len(sc.statusTracker().getJobIdsForGroup(str(query.runId)))
+
+
+class TestTriggerCost:
+    """One trigger reads its source once and runs one Spark job per sink."""
+
+    @staticmethod
+    def _drain(spark, tmp_path, n, max_per_trigger, name):
+        """Stream ``n`` messages from a replay file through start_pipeline
+        until drained; returns the stopped query."""
+        replay = tmp_path / f"replay_{name}.jsonl"
+        write_replay_file(str(replay), _messages(n))
+        spark.dataSource.register(NatsDataSource)
+        cfg = EngineConfig(
+            warehouse_dir=str(tmp_path / f"wh_{name}"),
+            checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
+        )
+        src = (
+            spark.readStream.format("nats-jetstream")
+            .option("replayFile", str(replay))
+            .option("subjects", "globex.>")
+            .option("maxRecordsPerTrigger", max_per_trigger)
+            .load()
+        )
+        q = start_pipeline(spark, cfg, src, query_name=name, trigger_seconds=0)
+        stop_gracefully(q)
+        return q
+
+    def test_num_input_rows_equals_admitted(self, spark, tmp_path):
+        """A backlog larger than maxRecordsPerTrigger drains in several
+        triggers; each reports exactly the rows it admitted (a second read
+        of the source would double numInputRows)."""
+        q = self._drain(spark, tmp_path, 25, 10, "rows")
+        batches = [p for p in q.recentProgress if _admitted(p) > 0]
+        assert [_admitted(p) for p in batches] == [10, 10, 5]
+        assert [p.numInputRows for p in batches] == [10, 10, 5]
+
+    def test_clean_batch_runs_one_job_per_sink(self, spark, tmp_path):
+        q = self._drain(spark, tmp_path, 20, 100, "jobs")
+        assert [_admitted(p) for p in q.recentProgress if _admitted(p)] == [20]
+        # raw, union, analytics; no dead letters, so no dead-letter write
+        assert _trigger_jobs(spark, q) == 3
+
+    def test_dead_letters_add_one_job(self, spark, tmp_path):
+        """Malformed rows cost exactly one more job, the dead-letter write,
+        and every one of them lands there. The envelope file source is used
+        because its rows may lack JetStream metadata."""
+        from go_nats_to_clickhouse_spark.sources.envelope import (
+            message_file_stream,
+        )
+
+        def run(name, n_malformed):
+            good = [
+                '{"metadata":{"timestamp":1709294400,"sequence":%d},'
+                '"subject":"globex.supprt.u%d.chat-1.click","data":"{}"}' % (i + 1, i)
+                for i in range(6)
+            ]
+            bad = ['{"subject":"globex.supprt.u0.chat-1.click","data":"{}"}'] * n_malformed
+            arrivals = tmp_path / f"arrivals_{name}"
+            arrivals.mkdir()
+            (arrivals / "part-0.txt").write_text("\n".join(good + bad) + "\n")
+            cfg = EngineConfig(
+                warehouse_dir=str(tmp_path / f"wh_{name}"),
+                checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
+            )
+            src = message_file_stream(spark, str(arrivals))
+            q = start_pipeline(spark, cfg, src, query_name=name, trigger_seconds=0)
+            stop_gracefully(q)
+            assert spark.read.parquet(
+                os.path.join(cfg.warehouse_dir, ANALYTICS_TABLE)
+            ).count() == 6
+            return cfg, _trigger_jobs(spark, q)
+
+        _, clean_jobs = run("env-clean", 0)
+        cfg, dead_jobs = run("env-dead", 3)
+        assert clean_jobs == 3
+        assert dead_jobs == clean_jobs + 1
+        dead = spark.read.parquet(os.path.join(cfg.warehouse_dir, DEAD_LETTER_TABLE))
+        assert dead.count() == 3
+
+
 class TestDeadLetter:
     def test_malformed_rows_kept_not_dropped(self, spark, tmp_path):
         # fixes reference quirk K4 (main.go:162-166: dropped rows still acked)
@@ -169,7 +268,7 @@ class TestIdempotentSink:
                 for i in range(10)
             ]
             df = spark.createDataFrame(rows, MESSAGE_SCHEMA)
-            apply_cascade(df, tables, idempotent=True, collect_counts=False)
+            apply_cascade(df, tables, idempotent=True)
         alls = spark.read.parquet(tables.path(ALL_STREAMS_TABLE)).count()
         ana = spark.read.parquet(tables.path(ANALYTICS_TABLE)).count()
         assert alls == ana == 30
@@ -359,10 +458,7 @@ class TestComposedIngestService:
             spark,
             str(next(arrivals.glob("part-*.txt"))),
         )
-        apply_cascade(
-            replayed, PipelineTables(cfg.warehouse_dir),
-            idempotent=True, collect_counts=False,
-        )
+        apply_cascade(replayed, PipelineTables(cfg.warehouse_dir), idempotent=True)
         append_batch_index(docs_from_messages(replayed), idx, is_new=True)
         ana = spark.read.parquet(os.path.join(cfg.warehouse_dir, ANALYTICS_TABLE))
         assert ana.count() == 12  # cascade absorbed the replay
